@@ -69,13 +69,14 @@ def _hash_min(edges: DataFrame, src: str, dst: str,
                    .localCheckpoint(eager=True))
         labels = stepped.select("node", "comp")
         if i == 0 and max_iter > 1:
-            # round 1 cannot converge on a nonempty edge set — for any
-            # edge (u, v) with u < v, v's label drops to <= u < v — so
-            # the convergence-probe job is provably redundant; skip it
-            # (one fewer action per CC run, r15 guide §1.2: every job
-            # carries the fixed scheduling floor).  An EMPTY edge set
-            # (which DID converge at round 1) now detects convergence
-            # one round later over empty frames: same labels, same flag.
+            # round 1 cannot converge if any edge has u != v — for such
+            # an edge with u < v, v's label drops to <= u < v — so the
+            # convergence-probe job is redundant there; skip it (one
+            # fewer action per CC run, r15 guide §1.2: every job carries
+            # the fixed scheduling floor).  An edge set that is empty or
+            # holds only self-loops (u == v) DOES converge at round 1; it
+            # is detected one round later, over unchanged labels: same
+            # labels, same flag.
             continue
         changed = stepped.where(F.col("comp") != F.col("old_comp")).count()
         if changed == 0:

@@ -39,15 +39,16 @@ def fold_sum_exact(key_col, val: Column,
     if the group holds more than ``max_width`` rows — raise the bound
     (or switch to a plain windowed sum, which needs no array) for wider
     groups."""
-    arr = F.transform(
-        F.array_sort(F.collect_list(F.struct(key_col, val.alias("v")))),
-        lambda s: s["v"])
+    rows = F.collect_list(F.struct(key_col, val.alias("v")))
+    # the guard reads the unsorted list's size, so each group is sorted
+    # once: Spark does not share an array_sort repeated between the CASE
+    # condition and its branch
     guarded = F.when(
-        F.size(arr) > max_width,
+        F.size(rows) > max_width,
         F.raise_error(F.concat(
-            F.lit(f"{label}: fold group holds "), F.size(arr).cast("string"),
+            F.lit(f"{label}: fold group holds "), F.size(rows).cast("string"),
             F.lit(f" rows (> max_width={max_width}); the order-pinned "
                   "array fold materializes the whole group in one task — "
                   "raise max_width or use a plain windowed sum")))
-    ).otherwise(arr)
+    ).otherwise(F.transform(F.array_sort(rows), lambda s: s["v"]))
     return F.aggregate(guarded, F.lit(0.0), lambda a, b: a + b)

@@ -5,98 +5,105 @@ inside ``prices_to_signals`` (reference ``moonshot/strategies/base.py``
 DataFrame-of-prices idiom; e.g. the DMA example in the reference README
 uses ``prices.rolling()``).  This module provides the standard indicator
 vocabulary those strategies draw on, as pure Spark ``Column``
-constructors over a sid-partitioned, date-ordered window — no Python
-UDFs, every indicator stays inside whole-stage codegen.
+constructors over the per-sid date-ordered window of
+``functions.window`` — no Python UDFs, no per-row arrays.  The catalog
+queries ``ta_bollinger_rsi`` and ``ta_macd_stoch_obv`` call these
+functions, so the DuckDB oracle certifies the code users run.
 
 Scale notes
 -----------
-Every helper takes (or builds) ``Window.partitionBy("sid").orderBy
-("date")`` with a BOUNDED trailing rows frame: one shuffle by sid for the
-whole indicator stack, constant per-row state, no unbounded-preceding
-frames except where the semantics are genuinely cumulative (OBV), which
-Spark evaluates with a running accumulator — still one pass.  Stacking
-any number of indicators over the same window adds zero extra shuffles:
-Catalyst collapses them into a single WindowExec.
+Every indicator is a frame aggregate over ``Window.partitionBy("sid")
+.orderBy("date")`` with a BOUNDED trailing rows frame, except OBV, whose
+semantics are genuinely cumulative and which Spark evaluates as a running
+accumulator — still one pass.  Stacking any number of indicators over the
+same window adds zero extra shuffles: Catalyst collapses them into
+WindowExec nodes over one sort.
 
-Cross-engine exactness: indicators use only +, -, *, /, min/max,
-greatest/least and integer counts — IEEE-exact-rounded ops that match
-DuckDB bit-for-bit.  The EWMA-family smoothers (Wilder RSI, standard
-MACD) are offered in their SMA variants (Cutler's RSI, SMA-MACD) so the
-oracle comparison has no libm pow()/exp() in it; the recursive forms are
-available through ``functions.window`` EWMA if bit-parity is not needed.
+Cross-engine exactness: the indicators are written in the forms the
+oracle SQL fixes.  Rolling means and moments are frame sums over a frame
+row count (``window.frame_sum`` / ``frame_rows``): Spark folds a frame
+left to right in date order, the same order as the oracle's
+``list_reduce`` over ``list(x) OVER frame``, so the doubles agree bit for
+bit.  Bollinger σ comes from Σx and Σx² (0 when the cancellation-prone
+variance is not positive, NULL on 1-row frames); RSI is
+100·Σgain/(Σgain+Σloss), where the average denominators cancel.  The
+remaining ops (+, −, *, /, sqrt, min/max, greatest) are correctly
+rounded on both engines.  The EWMA-family smoothers (Wilder RSI,
+standard MACD) are offered in their SMA variants (Cutler's RSI,
+SMA-MACD), so no libm pow()/exp() enters the comparison; the recursive
+forms are available through ``functions.window`` EWMA if bit-parity is
+not needed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import WindowSpec
+
+from moonshot_spark.functions.window import (
+    ColumnOrName, _c, frame_mean, frame_rows, frame_sum, rolling_max,
+    rolling_mean, rolling_min, rolling_sum, running, shift, trailing,
+)
 
 
-def sid_window(order: str = "date") -> WindowSpec:
-    return Window.partitionBy("sid").orderBy(order)
+def sma(col: ColumnOrName, n: int) -> Column:
+    """n-row simple moving average over the rows present (partial frames
+    at the start of each sid); NULL if any row of the frame is NULL."""
+    return frame_mean(col, trailing(n))
 
 
-def trailing(n: int, order: str = "date") -> WindowSpec:
-    """Bounded trailing frame of n rows (current inclusive)."""
-    return sid_window(order).rowsBetween(-(n - 1), 0)
-
-
-def sma(col: Column | str, n: int) -> Column:
-    return F.avg(col).over(trailing(n))
-
-
-def rolling_std(col: Column | str, n: int) -> Column:
-    return F.stddev_samp(col).over(trailing(n))
-
-
-def bollinger(close: Column | str = "close", n: int = 20,
+def bollinger(close: ColumnOrName = "close", n: int = 20,
               k: float = 2.0) -> dict[str, Column]:
     """Bollinger bands: n-row SMA ± k·sample-std, plus %B position.
 
-    %B = (close − lower) / (upper − lower); NULL while the band is
-    degenerate (std undefined at the first row of each sid).
+    σ from the frame's Σx and Σx²: 0 when the variance term is not
+    positive (catastrophic cancellation on a flat frame), NULL on 1-row
+    frames.  %B = (close − lower) / (upper − lower); NULL while the
+    band is degenerate.
     """
-    mid = sma(close, n)
-    sd = rolling_std(close, n)
+    c = _c(close)
+    frame = trailing(n)
+    m = frame_rows(frame).cast("double")
+    s1 = frame_sum(c, frame)
+    s2 = frame_sum(c * c, frame)
+    mid = s1 / m
+    var = (s2 - s1 * s1 / m) / (m - 1)
+    sd = F.when(m > 1, F.when(var > 0, F.sqrt(var)).otherwise(F.lit(0.0)))
     upper = mid + F.lit(k) * sd
     lower = mid - F.lit(k) * sd
-    c = F.col(close) if isinstance(close, str) else close
     pct_b = (c - lower) / (upper - lower)
     return {"bb_mid": mid, "bb_upper": upper, "bb_lower": lower,
             "bb_pct_b": pct_b}
 
 
-def rsi_cutler(close: Column | str = "close", n: int = 14) -> Column:
-    """Cutler's RSI: 100·avgGain/(avgGain+avgLoss) over an n-row SMA.
+def rsi_cutler(close: ColumnOrName = "close", n: int = 14) -> Column:
+    """Cutler's RSI: 100·Σgain/(Σgain+Σloss) over the n-row frame.
 
     The SMA variant of Wilder's RSI (Cutler 1980s): same bounded
     oscillator, but linear — so it is frame-exact, engine-portable, and
-    needs no recursive state.  Gains/losses come from the 1-row diff;
-    the first row of each sid contributes NULL and is excluded by avg's
-    null-skipping, matching pandas ``rolling(min_periods=1)`` on a
-    diffed series.
+    needs no recursive state.  The average-gain/loss denominators
+    cancel, so no null-skipping mean is involved: the first row of each
+    sid (no previous close) contributes a 0 gain and a 0 loss, and a
+    flat frame yields NULL (0/0).
     """
-    c = F.col(close) if isinstance(close, str) else close
-    chg = c - F.lag(c, 1).over(sid_window())
-    gain = F.when(chg > 0, chg).otherwise(
-        F.when(chg.isNotNull(), F.lit(0.0)))
-    loss = F.when(chg < 0, -chg).otherwise(
-        F.when(chg.isNotNull(), F.lit(0.0)))
-    avg_gain = F.avg(gain).over(trailing(n))
-    avg_loss = F.avg(loss).over(trailing(n))
-    return F.lit(100.0) * avg_gain / (avg_gain + avg_loss)
+    c = _c(close)
+    chg = c - shift(c, 1)
+    gains = rolling_sum(F.when(chg > 0, chg).otherwise(F.lit(0.0)), n,
+                        min_periods=1)
+    losses = rolling_sum(F.when(chg < 0, -chg).otherwise(F.lit(0.0)), n,
+                         min_periods=1)
+    return F.lit(100.0) * gains / (gains + losses)
 
 
-def macd_sma_line(close: Column | str = "close", fast: int = 12,
+def macd_sma_line(close: ColumnOrName = "close", fast: int = 12,
                   slow: int = 26) -> Column:
     """SMA-MACD line: fast-SMA − slow-SMA.
 
     The standard MACD uses ewm(12/26/9); the SMA variant keeps the same
     crossover structure while staying transcendental-free (see module
     docstring).  The signal line is an SMA **of the MACD line** — apply
-    ``F.avg(...).over(trailing(9))`` to the materialized line column;
-    still the same sid partition, so Catalyst keeps it in one shuffle.
+    ``sma(line, 9)`` to the materialized line column; still the same
+    sid partition, so Catalyst keeps it in one shuffle.
     """
     return sma(close, fast) - sma(close, slow)
 
@@ -108,7 +115,7 @@ def true_range(high: str = "high", low: str = "low",
     First row per sid falls back to H−L (prev close undefined), the
     standard convention.
     """
-    prev_c = F.lag(close, 1).over(sid_window())
+    prev_c = shift(close, 1)
     hl = F.col(high) - F.col(low)
     return F.when(prev_c.isNull(), hl).otherwise(
         F.greatest(hl, F.abs(F.col(high) - prev_c),
@@ -117,27 +124,30 @@ def true_range(high: str = "high", low: str = "low",
 
 def stochastic_k(close: str = "close", high: str = "high",
                  low: str = "low", n: int = 14) -> Column:
-    """Stochastic %K: position of close within the n-row high/low range."""
-    hh = F.max(high).over(trailing(n))
-    ll = F.min(low).over(trailing(n))
+    """Stochastic %K: position of close within the n-row high/low range;
+    NULL on a flat range."""
+    hh = rolling_max(high, n, min_periods=1)
+    ll = rolling_min(low, n, min_periods=1)
     return F.lit(100.0) * (F.col(close) - ll) / (hh - ll)
+
+
+def stochastic_d(stoch_k: ColumnOrName = "stoch_k", n: int = 3) -> Column:
+    """Stochastic %D: mean of the non-NULL %K values of the n-row frame
+    (a flat range leaves %K NULL); NULL when none is defined."""
+    return rolling_mean(stoch_k, n, min_periods=1)
 
 
 def obv(close: str = "close", volume: str = "volume") -> Column:
     """On-balance volume: running sum of sign(Δclose)·volume.
 
     DECIMAL accumulation (volume is an integer count in the panel) so the
-    cumulative sum is exact at any depth; the frame is genuinely
-    unbounded-preceding — Spark evaluates it as a running accumulator in
-    one pass over the sid partition, not by re-summing per row.
+    cumulative sum is exact at any depth, returned as a double.
     """
-    chg = F.col(close) - F.lag(close, 1).over(sid_window())
+    chg = F.col(close) - shift(close, 1)
     signed = (F.when(chg > 0, F.col(volume))
               .when(chg < 0, -F.col(volume))
               .otherwise(F.lit(0.0))).cast("decimal(18,1)")
-    return (F.sum(signed)
-            .over(sid_window().rowsBetween(Window.unboundedPreceding, 0))
-            .cast("decimal(38,1)"))
+    return F.sum(signed).over(running()).cast("double")
 
 
 def with_indicators(panel: DataFrame) -> DataFrame:
@@ -150,18 +160,16 @@ def with_indicators(panel: DataFrame) -> DataFrame:
     bb = bollinger()
     out = panel.select(
         "*",
-        bb["bb_mid"].alias("bb_mid"),
-        bb["bb_upper"].alias("bb_upper"),
-        bb["bb_lower"].alias("bb_lower"),
-        bb["bb_pct_b"].alias("bb_pct_b"),
+        *(bb[name].alias(name) for name in
+          ("bb_mid", "bb_upper", "bb_lower", "bb_pct_b")),
         rsi_cutler().alias("rsi"),
         macd_sma_line().alias("macd_line"),
         true_range().alias("true_range"),
         stochastic_k().alias("stoch_k"),
         obv().alias("obv"),
     )
-    out = out.withColumn(
-        "macd_signal", F.avg("macd_line").over(trailing(9))).withColumn(
-        "atr", F.avg("true_range").over(trailing(14))).withColumn(
-        "stoch_d", F.avg("stoch_k").over(trailing(3)))
-    return out
+    return out.select(
+        "*",
+        sma("macd_line", 9).alias("macd_signal"),
+        sma("true_range", 14).alias("atr"),
+        stochastic_d().alias("stoch_d"))

@@ -83,10 +83,48 @@ def ffill(col: ColumnOrName, w: WindowSpec | None = None) -> Column:
     Reference: base.py:935,1500,1623.  ``F.last(ignorenulls=True)`` over an
     unbounded-preceding frame — stays in codegen, no UDF.
     """
+    return F.last(_c(col), ignorenulls=True).over(running(w))
+
+
+def trailing(n: int, w: WindowSpec | None = None) -> WindowSpec:
+    """Trailing frame of n rows, the current row included."""
     w = w if w is not None else sid_window()
-    return F.last(_c(col), ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
+    return w.rowsBetween(-(n - 1), 0)
+
+
+def running(w: WindowSpec | None = None) -> WindowSpec:
+    """Cumulative frame: every row up to and including the current one."""
+    w = w if w is not None else sid_window()
+    return w.rowsBetween(Window.unboundedPreceding, 0)
+
+
+def frame_rows(frame: WindowSpec) -> Column:
+    """Rows in ``frame``, NULL values included — the length of the array
+    ``collect_list(struct(...)).over(frame)`` would build."""
+    return F.count(F.lit(1)).over(frame)
+
+
+def frame_sum(col: ColumnOrName, frame: WindowSpec) -> Column:
+    """Σ col over ``frame``, NULL when any row of the frame holds NULL.
+
+    This is the order-pinned array fold ``aggregate(array_sort(
+    collect_list(struct(key, v)).over(frame)), 0.0, +)`` without the
+    array: Spark evaluates a frame aggregate left to right in the
+    frame's ORDER BY order (sliding frames re-fold their rows, running
+    and whole-partition frames accumulate in order), so the doubles are
+    identical bit for bit — ``tests/test_window_functions.py`` pins it.
+    The NULL guard keeps the fold's ``NULL + x = NULL``; over an
+    ``ORDER BY sid`` whole-partition frame this is the cross-sectional
+    normalizer of a date.
+    """
+    c = _c(col)
+    return F.when(F.count(c).over(frame) == frame_rows(frame),
+                  F.sum(c).over(frame))
+
+
+def frame_mean(col: ColumnOrName, frame: WindowSpec) -> Column:
+    """``frame_sum / frame_rows``: the fold mean, NULL if any row is NULL."""
+    return frame_sum(col, frame) / frame_rows(frame)
 
 
 def _rolling(agg, col: ColumnOrName, n: int, w: WindowSpec | None,
@@ -97,8 +135,7 @@ def _rolling(agg, col: ColumnOrName, n: int, w: WindowSpec | None,
     window is full.  Spark's frame just aggregates whatever rows exist, so we
     guard with a non-null count over the same frame.
     """
-    w = w if w is not None else sid_window()
-    frame = w.rowsBetween(-(n - 1), 0)
+    frame = trailing(n, w)
     mp = n if min_periods is None else min_periods
     value = agg(_c(col)).over(frame)
     if mp <= 1:
@@ -141,23 +178,17 @@ def _cum(agg_val: Column, col: ColumnOrName) -> Column:
 
 
 def cum_sum(col: ColumnOrName, w: WindowSpec | None = None) -> Column:
-    w = w if w is not None else sid_window()
-    frame = w.rowsBetween(Window.unboundedPreceding, 0)
-    return _cum(F.sum(_c(col)).over(frame), col)
+    return _cum(F.sum(_c(col)).over(running(w)), col)
 
 
 def cum_prod(col: ColumnOrName, w: WindowSpec | None = None) -> Column:
     """Cumulative product via exp∘sum∘log — valid for positive factors
     (the compound-returns use case: (1+r).cumprod())."""
-    w = w if w is not None else sid_window()
-    frame = w.rowsBetween(Window.unboundedPreceding, 0)
-    return _cum(F.exp(F.sum(F.log(_c(col))).over(frame)), col)
+    return _cum(F.exp(F.sum(F.log(_c(col))).over(running(w))), col)
 
 
 def cum_max(col: ColumnOrName, w: WindowSpec | None = None) -> Column:
-    w = w if w is not None else sid_window()
-    frame = w.rowsBetween(Window.unboundedPreceding, 0)
-    return _cum(F.max(_c(col)).over(frame), col)
+    return _cum(F.max(_c(col)).over(running(w)), col)
 
 
 def days_since_prev(date_col: ColumnOrName = "date", w: WindowSpec | None = None) -> Column:

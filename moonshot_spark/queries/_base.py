@@ -11,13 +11,21 @@ Each entry maps a name to (spark_fn, oracle_sql):
 Cross-engine float discipline: two-operand double arithmetic (+,-,*,/) and
 min/max/lag/count are bit-deterministic across engines, so most queries
 hash-match exactly.  Multi-row accumulations (sum/avg over many rows) are
-association-order-dependent, so aggregates sum via DECIMAL(18,2) (inputs
-are 2-decimal money; decimal sums are exact in both engines, cast back to
-double).  Avoid ``round()`` on doubles in query outputs: Spark rounds the
-shortest decimal repr (HALF_UP) while DuckDB rounds the binary value, so
-even bit-identical inputs can round differently at .xx5 boundaries —
-``floor``/``round_even`` (= Spark ``bround`` on halves away from repr
-boundaries) or no rounding at all are the portable choices.
+association-order-dependent.  Grouped aggregates sum 2-decimal money via
+DECIMAL(18,2) (exact in both engines, cast back to double) and other
+doubles through ``functions/folds.fold_sum_exact`` — a sorted-array fold
+equal to DuckDB's ``list_reduce(list(x ORDER BY k), +)`` — because a
+Spark ``groupBy`` sum has no pinned order.  Window frames need no array
+on the Spark side: Spark folds a frame aggregate left to right in the
+window's ORDER BY order, so rolling, running and ``ORDER BY sid``
+cross-sectional sums use ``functions/window.py`` (``frame_sum``,
+``rolling_sum``, ``cum_sum``).  Only DuckDB's windowed sums re-associate,
+which is why its oracles fold ``list(x) OVER frame`` with ``list_reduce``
+(PERF.md float rule 5).  Avoid ``round()`` on doubles in query outputs:
+Spark rounds the shortest decimal repr (HALF_UP) while DuckDB rounds the
+binary value, so even bit-identical inputs can round differently at .xx5
+boundaries — ``floor``/``round_even`` (= Spark ``bround`` on halves away
+from repr boundaries) or no rounding at all are the portable choices.
 """
 
 from __future__ import annotations

@@ -6,9 +6,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark.functions import ta
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
+from moonshot_spark.functions.folds import fold_sum_exact
 from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
+    days_since_prev, diff, ffill, frame_rows, frame_sum, pct_change, shift,
+    trailing,
 )
 from moonshot_spark.queries._base import (
     PANEL_SQL, ORACLES, QUERIES, register,
@@ -88,19 +91,12 @@ def return_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
                          pct_change("close", 1, w).alias("r"))
             .where(F.col("r").isNotNull()))
 
-    def fold(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("date"),
-                                                 expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
     r = F.col("r")
+    powers = {"s1": r, "s2": r * r, "s3": r * r * r, "s4": r * r * r * r}
     series = (rets.groupBy("sid")
               .agg(F.count("*").alias("n"),
-                   fold(r).alias("s1"), fold(r * r).alias("s2"),
-                   fold(r * r * r).alias("s3"),
-                   fold(r * r * r * r).alias("s4"))
+                   *(fold_sum_exact("date", e, label="return_moments")
+                     .alias(a) for a, e in powers.items()))
               .where(F.col("n") >= 4))
     n = F.col("n")
     s1, s2, s3, s4 = (F.col(c) for c in ("s1", "s2", "s3", "s4"))
@@ -158,18 +154,13 @@ def correlation_to_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = (rets.where(F.col("r").isNotNull() & (F.col("sid") != "7"))
               .join(bench, "date"))
 
-    def fold(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("date"), expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
+    r, rb = F.col("r"), F.col("rb")
+    moments = {"sx": r, "sy": rb, "sxy": r * rb, "sxx": r * r,
+               "syy": rb * rb}
     series = joined.groupBy("sid").agg(
         F.count("*").alias("n"),
-        fold(F.col("r")).alias("sx"), fold(F.col("rb")).alias("sy"),
-        fold(F.col("r") * F.col("rb")).alias("sxy"),
-        fold(F.col("r") * F.col("r")).alias("sxx"),
-        fold(F.col("rb") * F.col("rb")).alias("syy"))
+        *(fold_sum_exact("date", e, label="correlation_to_benchmark")
+          .alias(a) for a, e in moments.items()))
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     corr = (n * sxy - sx * sy) / (F.sqrt(n * sxx - sx * sx)
@@ -621,23 +612,19 @@ def walkforward_ar1_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("tag", tag)
             .where(F.col("tag").isNotNull()))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="walkforward_ar1_cv")
-
+    # width-guarded order-pinned folds (functions/folds.py): errors
+    # inside the job if a group outgrows the in-array bound
+    q = "walkforward_ar1_cv"
+    x, y = F.col("x"), F.col("y")
     partials = kept.groupBy("fold", "tag", "sid").agg(
         F.count("*").alias("cnt"),
-        fold_by("date", F.col("x") * F.col("y")).alias("pxy"),
-        fold_by("date", F.col("x") * F.col("x")).alias("pxx"),
-        fold_by("date", F.col("y") * F.col("y")).alias("pyy"))
+        fold_sum_exact("date", x * y, label=q).alias("pxy"),
+        fold_sum_exact("date", x * x, label=q).alias("pxx"),
+        fold_sum_exact("date", y * y, label=q).alias("pyy"))
     sums = partials.groupBy("fold", "tag").agg(
         F.sum("cnt").alias("n"),
-        fold_by("sid", F.col("pxy")).alias("sxy"),
-        fold_by("sid", F.col("pxx")).alias("sxx"),
-        fold_by("sid", F.col("pyy")).alias("syy"))
+        *(fold_sum_exact("sid", F.col(f"p{m}"), label=q).alias(f"s{m}")
+          for m in ("xy", "xx", "yy")))
     pick = lambda t, c: F.max(F.when(F.col("tag") == t, F.col(c)))
     wide = sums.groupBy("fold").agg(
         pick("train", "n").alias("n_train"),
@@ -712,24 +699,18 @@ def event_study_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
           .withColumn("event", F.when(F.col("gap") > 0.02, "gap_up")
                       .otherwise("gap_down")))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="event_study_gaps")
-
+    q = "event_study_gaps"
     partials = ev.groupBy("event", "sid").agg(
         F.count("fwd1").alias("n1"),
         F.count("fwd2").alias("n2"),
-        fold_by("date", F.coalesce(F.col("fwd1"), F.lit(0))).alias("p1"),
-        fold_by("date", F.coalesce(F.col("fwd2"), F.lit(0))).alias("p2"))
+        *(fold_sum_exact("date", F.coalesce(F.col(f"fwd{h}"), F.lit(0)),
+                         label=q).alias(f"p{h}") for h in (1, 2)))
     return partials.groupBy("event").agg(
         F.sum("n1").alias("n_fwd1"),
-        (fold_by("sid", F.col("p1"))
+        (fold_sum_exact("sid", F.col("p1"), label=q)
          / F.sum("n1").cast("double")).alias("mean_fwd1"),
         F.sum("n2").alias("n_fwd2"),
-        (fold_by("sid", F.col("p2"))
+        (fold_sum_exact("sid", F.col("p2"), label=q)
          / F.sum("n2").cast("double")).alias("mean_fwd2"))
 
 
@@ -790,18 +771,13 @@ def ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("r", 2).over(w).alias("r2"),
         F.lag("r", 3).over(w).alias("r3"))
 
-    def fold_by(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
+    r = F.col("r")
     sums = lagged.groupBy("sid").agg(
         F.count("r").alias("n"),
-        fold_by(F.col("r") * F.col("r")).alias("s0"),
-        fold_by(F.coalesce(F.col("r") * F.col("r1"), F.lit(0))).alias("s1"),
-        fold_by(F.coalesce(F.col("r") * F.col("r2"), F.lit(0))).alias("s2"),
-        fold_by(F.coalesce(F.col("r") * F.col("r3"), F.lit(0))).alias("s3"))
+        fold_sum_exact("date", r * r, label="ljung_box_q").alias("s0"),
+        *(fold_sum_exact("date", F.coalesce(r * F.col(f"r{k}"), F.lit(0)),
+                         label="ljung_box_q").alias(f"s{k}")
+          for k in (1, 2, 3)))
     rho = lambda s, k: F.col(s) / F.col("s0")
     n = F.col("n")
     q = (n * (n + 2)
@@ -1025,20 +1001,13 @@ def variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     r5 = F.col("close") / F.lag("close", 5).over(w) - 1
     rets = panel.select("sid", "date", r1.alias("r1"), r5.alias("r5"))
 
-    def fold_by(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
+    r1, r5 = F.col("r1"), F.col("r5")
+    moments = {"s1": r1, "s11": r1 * r1, "s5": r5, "s55": r5 * r5}
     sums = rets.groupBy("sid").agg(
         F.count("r1").alias("n1"), F.count("r5").alias("n5"),
-        fold_by(F.coalesce(F.col("r1"), F.lit(0))).alias("s1"),
-        fold_by(F.coalesce(F.col("r1") * F.col("r1"), F.lit(0)))
-        .alias("s11"),
-        fold_by(F.coalesce(F.col("r5"), F.lit(0))).alias("s5"),
-        fold_by(F.coalesce(F.col("r5") * F.col("r5"), F.lit(0)))
-        .alias("s55"))
+        *(fold_sum_exact("date", F.coalesce(e, F.lit(0)),
+                         label="variance_ratio_test").alias(a)
+          for a, e in moments.items()))
     var1 = ((F.col("s11") - F.col("s1") * F.col("s1") / F.col("n1"))
             / (F.col("n1") - 1))
     var5 = ((F.col("s55") - F.col("s5") * F.col("s5") / F.col("n5"))
@@ -1172,21 +1141,16 @@ def gap_fade_tstat(spark: SparkSession, sf_dir: str) -> DataFrame:
           .withColumn("grp", F.when(F.col("gap") > 0.02, "up")
                       .otherwise("down")))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="gap_fade_tstat")
-
+    q = "gap_fade_tstat"
+    fwd1 = F.col("fwd1")
     partials = ev.groupBy("grp", "sid").agg(
         F.count("*").alias("cnt"),
-        fold_by("date", F.col("fwd1")).alias("px"),
-        fold_by("date", F.col("fwd1") * F.col("fwd1")).alias("pxx"))
+        fold_sum_exact("date", fwd1, label=q).alias("px"),
+        fold_sum_exact("date", fwd1 * fwd1, label=q).alias("pxx"))
     sums = partials.groupBy("grp").agg(
         F.sum("cnt").alias("n"),
-        fold_by("sid", F.col("px")).alias("sx"),
-        fold_by("sid", F.col("pxx")).alias("sxx"))
+        fold_sum_exact("sid", F.col("px"), label=q).alias("sx"),
+        fold_sum_exact("sid", F.col("pxx"), label=q).alias("sxx"))
     pick = lambda g, c: F.max(F.when(F.col("grp") == g, F.col(c)))
     wide = sums.agg(
         pick("up", "n").alias("n1"), pick("up", "sx").alias("sx1"),
@@ -1262,17 +1226,12 @@ def james_stein_means(spark: SparkSession, sf_dir: str) -> DataFrame:
                          pct_change("close", 1, w).alias("r"))
             .where(F.col("r").isNotNull()))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="james_stein_means")
-
+    q = "james_stein_means"
     per_sid = rets.groupBy("sid").agg(
         F.count("r").alias("n"),
-        fold_by("date", F.col("r")).alias("sx"),
-        fold_by("date", F.col("r") * F.col("r")).alias("sxx"))
+        fold_sum_exact("date", F.col("r"), label=q).alias("sx"),
+        fold_sum_exact("date", F.col("r") * F.col("r"), label=q)
+        .alias("sxx"))
     m = (per_sid.where(F.col("n") > 1)
          .select("sid", "n",
                  (F.col("sx") / F.col("n")).alias("mean_r"),
@@ -1280,14 +1239,14 @@ def james_stein_means(spark: SparkSession, sf_dir: str) -> DataFrame:
                    / (F.col("n") - 1)) / F.col("n")).alias("se2")))
     g = m.agg(
         F.count("*").alias("k"),
-        (fold_by("sid", F.col("mean_r"))
+        (fold_sum_exact("sid", F.col("mean_r"), label=q)
          / F.count("*").cast("double")).alias("grand"),
-        (fold_by("sid", F.col("se2"))
+        (fold_sum_exact("sid", F.col("se2"), label=q)
          / F.count("*").cast("double")).alias("se2_bar"))
     mg = m.crossJoin(F.broadcast(g))
-    ss = mg.agg(fold_by(
+    ss = mg.agg(fold_sum_exact(
         "sid", (F.col("mean_r") - F.col("grand"))
-        * (F.col("mean_r") - F.col("grand"))).alias("ss"))
+        * (F.col("mean_r") - F.col("grand")), label=q).alias("ss"))
     c = F.greatest(
         F.lit(0.0),
         F.lit(1.0) - (F.col("k") - 3) * F.col("se2_bar") / F.col("ss"))
@@ -1385,15 +1344,10 @@ def information_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1.0) - F.lit(6.0) * F.col("ssd").cast("double")
          / (nd * (nd * nd - F.lit(1.0)))).alias("ic"))
 
-    def fold_by(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
     cnt = F.count("*").cast("double")
-    s1 = fold_by(F.col("ic"))
-    s2 = fold_by(F.col("ic") * F.col("ic"))
+    ic = F.col("ic")
+    s1 = fold_sum_exact("date", ic, label="information_coefficient")
+    s2 = fold_sum_exact("date", ic * ic, label="information_coefficient")
     mean = s1 / cnt
     tstat = mean / F.sqrt(((s2 - s1 * s1 / cnt) / (cnt - F.lit(1.0))) / cnt)
     return ics.agg(F.count("*").alias("n_days"),
@@ -1451,68 +1405,25 @@ FROM bands
 """)
 def ta_bollinger_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger bands (20, 2σ) + Cutler's RSI (14) per sid/date — the
-    mean-reversion signal pair of ``functions/ta.py``, here in the
-    fold-exact form (PERF.md float rule 5): rolling mean/variance come
-    from left-to-right folds of the bounded date-ordered frame array
-    (s1/s2 moments, association order pinned) and the RSI is
-    100·Σgains/(Σgains+Σlosses) — the avg-gain denominators cancel, so
-    the oscillator needs no null-skipping avg and no recursive Wilder
-    state.  Remaining ops (+ − * / sqrt, CASE) are IEEE-correctly-
-    rounded and identical cross-engine; degenerate frames resolve the
-    same way on both sides (σ: 0 when the catastrophic-cancellation
-    guard trips, NULL on 1-row frames; RSI/%B: NULL on flat frames via
-    zero-divide).  ONE shuffle by sid covers every indicator — the
-    frames are bounded (≤20 rows) so per-row state is constant at any
-    scale.  Production path: ``functions/ta.py`` windowed forms
-    (reference: pandas ``rolling`` signal idiom, moonshot
-    ``prices_to_signals``)."""
+    mean-reversion signal pair, built by ``functions/ta.py`` itself:
+    rolling mean/variance from the 20-row frame's Σx, Σx² and row count,
+    and the RSI as 100·Σgains/(Σgains+Σlosses) (the avg-gain
+    denominators cancel, so no null-skipping avg and no recursive Wilder
+    state).  Spark's frame sums fold in date order, the order of the
+    oracle's list_reduce, and the remaining ops (+ − * / sqrt, CASE) are
+    correctly rounded on both engines; degenerate frames resolve the
+    same way on both sides (σ: 0 when the cancellation guard trips, NULL
+    on 1-row frames; RSI/%B: NULL on flat frames via zero-divide).  ONE
+    shuffle by sid covers every indicator — the frames are bounded
+    (≤20 rows), so per-row state is constant at any scale (reference:
+    pandas ``rolling`` signal idiom, moonshot ``prices_to_signals``)."""
     panel = events_to_panel(spark, sf_dir)
-    ws = Window.partitionBy("sid").orderBy("date")
-    w20 = ws.rowsBetween(-19, 0)
-    w14 = ws.rowsBetween(-13, 0)
-    c20 = F.transform(
-        F.array_sort(F.collect_list(F.struct("date", "close")).over(w20)),
-        lambda s: s["close"])
-    chg = F.col("close") - F.lag("close").over(ws)
-    framed = panel.select("sid", "date", "close", c20.alias("c20"),
-                          chg.alias("chg"))
-    g14 = F.transform(
-        F.array_sort(F.collect_list(F.struct("date", "chg")).over(w14)),
-        lambda s: s["chg"])
-    # collect_list drops NULL rows, so the first row's NULL chg would
-    # shrink the frame vs DuckDB's list(); the struct wrapper keeps it.
-    chg_framed = framed.select("sid", "date", "close", "c20",
-                               g14.alias("g14"))
-    add = lambda a, b: a + b
-    m = F.size("c20").cast("double")
-    s1 = F.aggregate("c20", F.lit(0.0), add)
-    s2 = F.aggregate(F.transform("c20", lambda x: x * x), F.lit(0.0), add)
-    gs = F.aggregate(
-        F.transform("g14",
-                    lambda x: F.when(x > 0, x).otherwise(F.lit(0.0))),
-        F.lit(0.0), add)
-    ls = F.aggregate(
-        F.transform("g14",
-                    lambda x: F.when(x < 0, -x).otherwise(F.lit(0.0))),
-        F.lit(0.0), add)
-    moments = chg_framed.select(
-        "sid", "date", "close", m.alias("m"), s1.alias("s1"),
-        s2.alias("s2"), gs.alias("gs"), ls.alias("ls"))
-    var_c = (F.col("s2") - F.col("s1") * F.col("s1") / F.col("m")) \
-        / (F.col("m") - 1)
-    sd = F.when(F.col("m") > 1,
-                F.when(var_c > 0, F.sqrt(var_c)).otherwise(F.lit(0.0)))
-    bands = moments.select(
-        "sid", "date", "close", "gs", "ls",
-        (F.col("s1") / F.col("m")).alias("bb_mid"), sd.alias("sd"))
-    upper = F.col("bb_mid") + F.lit(2.0) * F.col("sd")
-    lower = F.col("bb_mid") - F.lit(2.0) * F.col("sd")
-    return bands.select(
-        "sid", "date", "close", "bb_mid",
-        upper.alias("bb_upper"), lower.alias("bb_lower"),
-        ((F.col("close") - lower) / (upper - lower)).alias("bb_pct_b"),
-        (F.lit(100.0) * F.col("gs")
-         / (F.col("gs") + F.col("ls"))).alias("rsi"))
+    bb = ta.bollinger()
+    return panel.select(
+        "sid", "date", "close",
+        *(bb[name].alias(name) for name in
+          ("bb_mid", "bb_upper", "bb_lower", "bb_pct_b")),
+        ta.rsi_cutler().alias("rsi"))
 
 
 @register("ta_macd_stoch_obv", f"""
@@ -1583,79 +1494,29 @@ FROM framed f JOIN obv o ON f.sid = o.sid AND f.date = o.date
 def ta_macd_stoch_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMA-MACD (12/26/9), stochastic oscillator (%K 14, %D 3), ATR (14)
     and on-balance volume per sid/date — the trend/momentum half of
-    ``functions/ta.py``, fold-exact like ``ta_bollinger_rsi``: every
-    rolling mean is a pinned left fold over the bounded frame array, %D
-    handles NULL %K rows (flat 1-row frames) with an explicit
-    count-non-null fold rather than a null-skipping avg, and OBV
-    accumulates DECIMAL signed volume so the running sum is exact and
-    association-free at any depth.  True range (greatest of H−L,
-    |H−prevC|, |L−prevC|, first-row H−L fallback) and the stochastic's
-    frame max/min are order-insensitive, so they ride plain windowed
-    aggregates.  The whole stack — 6 frames + a lag + a cumulative sum —
-    shares ONE sid shuffle; Spark evaluates them as stacked WindowExec
-    nodes over the same sort, and the Spark side avoids the SQL's
-    self-join by stacking the cumulative OBV window in the same plan."""
+    ``functions/ta.py``, built by it: every rolling mean is a frame sum
+    over the frame's row count (date-ordered, like the oracle's
+    list_reduce), %D averages the non-NULL %K rows (flat ranges leave
+    %K NULL), and OBV accumulates DECIMAL signed volume so the running
+    sum is exact at any depth.  True range (greatest of H−L, |H−prevC|,
+    |L−prevC|, first-row H−L fallback) and the stochastic's frame
+    max/min are order-insensitive.  The whole stack — 6 frames + a lag
+    + a cumulative sum — shares ONE sid shuffle; Spark evaluates them as
+    stacked WindowExec nodes over the same sort, and the Spark side
+    avoids the SQL's self-join by stacking the cumulative OBV window in
+    the same plan."""
     panel = events_to_panel(spark, sf_dir)
-    ws = Window.partitionBy("sid").orderBy("date")
-    prev_c = F.lag("close").over(ws)
-    base = panel.select("sid", "date", "close", "high", "low", "volume",
-                        prev_c.alias("prev_c"))
-    hl = F.col("high") - F.col("low")
-    tr_col = F.when(F.col("prev_c").isNull(), hl).otherwise(
-        F.greatest(hl, F.abs(F.col("high") - F.col("prev_c")),
-                   F.abs(F.col("low") - F.col("prev_c"))))
-    w14 = ws.rowsBetween(-13, 0)
-    w12 = ws.rowsBetween(-11, 0)
-    w26 = ws.rowsBetween(-25, 0)
-
-    def frame(col: str, w) -> Column:
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("date", col)).over(w)),
-            lambda s: s[col])
-
-    signed = (F.when(F.col("close") - F.col("prev_c") > 0, F.col("volume"))
-              .when(F.col("close") - F.col("prev_c") < 0, -F.col("volume"))
-              .otherwise(F.lit(0.0))).cast("decimal(18,1)")
-    tr = base.select(
-        "sid", "date", "close", "volume", "prev_c",
-        tr_col.alias("true_range"),
-        F.max("high").over(w14).alias("hh"),
-        F.min("low").over(w14).alias("ll"),
-        frame("close", w12).alias("c12"),
-        frame("close", w26).alias("c26"),
-        F.sum(signed).over(ws.rowsBetween(Window.unboundedPreceding, 0))
-         .cast("double").alias("obv"))
-    add = lambda a, b: a + b
-
-    def fold_mean(col: str) -> Column:
-        return (F.aggregate(col, F.lit(0.0), add)
-                / F.size(col).cast("double"))
-
-    line = tr.select(
-        "sid", "date", "close", "obv",
-        (fold_mean("c12") - fold_mean("c26")).alias("macd_line"),
-        (F.lit(100.0) * (F.col("close") - F.col("ll"))
-         / (F.col("hh") - F.col("ll"))).alias("stoch_k"),
-        "true_range")
-    w9 = ws.rowsBetween(-8, 0)
-    w3 = ws.rowsBetween(-2, 0)
-    framed = line.select(
-        "sid", "date", "close", "obv", "macd_line", "stoch_k",
-        frame("macd_line", w9).alias("l9"),
-        frame("stoch_k", w3).alias("k3"),
-        frame("true_range", w14).alias("t14"))
-    k_sum = F.aggregate(
-        F.transform("k3", lambda x: F.when(x.isNotNull(), x)
-                    .otherwise(F.lit(0.0))), F.lit(0.0), add)
-    k_cnt = F.aggregate(
-        F.transform("k3", lambda x: F.when(x.isNotNull(), F.lit(1.0))
-                    .otherwise(F.lit(0.0))), F.lit(0.0), add)
-    return framed.select(
+    line = panel.select(
+        "sid", "date", "close",
+        ta.macd_sma_line().alias("macd_line"),
+        ta.stochastic_k().alias("stoch_k"),
+        ta.true_range().alias("true_range"),
+        ta.obv().alias("obv"))
+    return line.select(
         "sid", "date", "close", "macd_line",
-        fold_mean("l9").alias("macd_signal"),
-        "stoch_k",
-        (k_sum / F.nullif(k_cnt, F.lit(0.0))).alias("stoch_d"),
-        fold_mean("t14").alias("atr"),
+        ta.sma("macd_line", 9).alias("macd_signal"),
+        "stoch_k", ta.stochastic_d().alias("stoch_d"),
+        ta.sma("true_range", 14).alias("atr"),
         "obv")
 
 
@@ -1711,16 +1572,17 @@ def market_model_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily return against the equal-weight cross-sectional index — the
     risk-factor input behind beta-neutral weight allocation (reference
     weight mixins neutralize dollar exposure; beta-neutralization is its
-    natural extension).  Exactness recipe: the index return aggregates
-    DECIMAL(18,9)-cast returns (cross-sid sum order must not matter),
-    and the rolling covariance moments are pinned left folds over the
-    bounded 20-row frame arrays (s_x s_y s_xx s_xy), with the paired
-    product via zip_with — association order identical to the oracle's
-    indexed list_transform.  beta = (n·s_xy − s_x·s_y)/(n·s_xx − s_x²)
-    guarded on a positive variance term, alpha from the same moments.
-    Plan: one sid-window pass for returns, one date groupBy for the
-    index (tiny — one row per date), an equi-join back on date, then
-    ONE more sid shuffle for the covariance frames."""
+    natural extension).  Exactness recipe: the index return is a
+    sid-ordered fold per date (``fold_sum_exact``) over the date's row
+    count, and the rolling covariance moments (s_x s_y s_xx s_xy) are
+    frame sums over the bounded 20-row frame, which Spark folds in date
+    order like the oracle's list_reduce; the paired product is a per-row
+    column, so its order matches the oracle's indexed list_transform.
+    beta = (n·s_xy − s_x·s_y)/(n·s_xx − s_x²) guarded on a positive
+    variance term, alpha from the same moments.  Plan: one sid-window
+    pass for returns, one date groupBy for the index (tiny — one row per
+    date), an equi-join back on date, then ONE more sid shuffle for the
+    covariance frames."""
     panel = events_to_panel(spark, sf_dir)
     ws = Window.partitionBy("sid").orderBy("date")
     prev = F.lag("close").over(ws)
@@ -1728,32 +1590,18 @@ def market_model_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sid", "date",
             (F.col("close") / prev - 1).alias("r"))
           .where(F.col("r").isNotNull()))
-    rs = F.transform(F.array_sort(F.collect_list(F.struct("sid", "r"))),
-                     lambda x: x["r"])
-    mkt = (rr.groupBy("date").agg(rs.alias("rs"))
-           .select("date", (F.aggregate("rs", F.lit(0.0),
-                                        lambda a, b: a + b)
-                            / F.size("rs").cast("double")).alias("mkt_r")))
+    mkt = rr.groupBy("date").agg(
+        (fold_sum_exact("sid", F.col("r"), label="market_model_rolling_beta")
+         / F.count("*").cast("double")).alias("mkt_r"))
     j = rr.join(mkt, "date").select("sid", "date", "r", "mkt_r")
-    w20 = ws.rowsBetween(-19, 0)
-
-    def frame(col: str) -> Column:
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("date", col)).over(w20)),
-            lambda s: s[col])
-
-    framed = j.select("sid", "date", "r", "mkt_r",
-                      frame("r").alias("lr"), frame("mkt_r").alias("lm"))
-    add = lambda a, b: a + b
-    n = F.size("lm").cast("double")
-    s_x = F.aggregate("lm", F.lit(0.0), add)
-    s_y = F.aggregate("lr", F.lit(0.0), add)
-    s_xx = F.aggregate(F.transform("lm", lambda x: x * x), F.lit(0.0), add)
-    s_xy = F.aggregate(F.zip_with("lm", "lr", lambda a, b: a * b),
-                       F.lit(0.0), add)
-    m = framed.select("sid", "date", "r", "mkt_r", n.alias("n"),
-                      s_x.alias("s_x"), s_y.alias("s_y"),
-                      s_xx.alias("s_xx"), s_xy.alias("s_xy"))
+    w20 = trailing(20, ws)
+    x, y = F.col("mkt_r"), F.col("r")
+    m = j.select("sid", "date", "r", "mkt_r",
+                 frame_rows(w20).cast("double").alias("n"),
+                 frame_sum(x, w20).alias("s_x"),
+                 frame_sum(y, w20).alias("s_y"),
+                 frame_sum(x * x, w20).alias("s_xx"),
+                 frame_sum(x * y, w20).alias("s_xy"))
     den = F.col("n") * F.col("s_xx") - F.col("s_x") * F.col("s_x")
     num = F.col("n") * F.col("s_xy") - F.col("s_x") * F.col("s_y")
     cond = (F.col("n") > 1) & (den > 0)

@@ -7,8 +7,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
+from moonshot_spark.functions.folds import fold_sum_exact
 from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
+    cum_max, cum_sum, days_since_prev, diff, ffill, frame_sum, pct_change,
+    rolling_sum, shift,
 )
 from moonshot_spark.queries._base import (
     PANEL_SQL, ORACLES, QUERIES, register,
@@ -1241,24 +1243,15 @@ def performance_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     results = DualMovingAverage().backtest(panel)
     rets = (results.where(F.col("field") == "Return")
             .select("sid", "date", F.col("value").alias("return")))
-    series = (rets.groupBy("sid")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("date", "return"))),
-                  lambda s: F.coalesce(s["return"], F.lit(0.0))).alias("rs")))
-    n = F.size("rs")
-    cums = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.aggregate(F.slice("rs", 1, i), F.lit(0.0),
-                              lambda a, b: a + b))
-    curves = series.select("sid", n.alias("n"), cums.alias("cums"))
-    mdd = F.array_min(F.transform(
-        F.sequence(F.lit(1), F.col("n")),
-        lambda i: F.element_at("cums", i)
-        - F.array_max(F.slice("cums", 1, i))))
-    return curves.select(
-        "sid", F.col("n").cast("long").alias("n_periods"),
-        F.element_at("cums", F.col("n")).alias("total_return"),
-        mdd.alias("max_drawdown"))
+    cum = rets.select(
+        "sid", "date",
+        cum_sum(F.coalesce(F.col("return"), F.lit(0.0))).alias("cum"))
+    curves = cum.select("sid", "date", "cum",
+                        (F.col("cum") - cum_max("cum")).alias("dd"))
+    return curves.groupBy("sid").agg(
+        F.count("*").alias("n_periods"),
+        F.max_by("cum", "date").alias("total_return"),
+        F.min("dd").alias("max_drawdown"))
 
 
 @register("sharpe_per_sid", """
@@ -1289,12 +1282,12 @@ FROM moments
 def sharpe_per_sid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Annualized Sharpe per sid over daily close-to-close returns, EXACT
     cross-engine: mean and variance come from left-to-right folds of the
-    date-ordered return array (association order pinned — a windowed
-    sum/stddev would diverge at the last ulp), and every remaining op
+    date-ordered return array (a ``groupBy`` sum has no pinned order, and
+    the one sorted array serves both moments), and every remaining op
     (+ * / sqrt) is IEEE-correctly-rounded and identical in Spark and
-    DuckDB.  This is the portability recipe for any moment-based metric
-    (PERF.md float rule 5); CAGR stays pytest-only because pow/exp are
-    libm-dependent."""
+    DuckDB.  This is the portability recipe for any grouped moment-based
+    metric (PERF.md float rules 2 and 5); CAGR stays pytest-only because
+    pow/exp are libm-dependent."""
     panel = events_to_panel(spark, sf_dir)
     w = Window.partitionBy("sid").orderBy("date")
     prev = F.lag("close").over(w)
@@ -1687,10 +1680,8 @@ def holding_period_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     nz = (base.withColumn("rn", F.row_number().over(w))
           .where(F.col("p") != 0)
           .withColumn("grp", F.col("rn") - F.row_number().over(w)))
-    folded = F.aggregate(
-        F.transform(F.array_sort(F.collect_list(F.struct("date", "r"))),
-                    lambda s: s["r"]),
-        F.lit(0.0), lambda a, b: a + b)
+    folded = fold_sum_exact("date", F.col("r"),
+                            label="holding_period_returns")
     return (nz.groupBy("sid", "grp")
             .agg(F.min("date").alias("entry_date"),
                  F.max("date").alias("exit_date"),
@@ -1758,29 +1749,17 @@ def vol_target_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel = events_to_panel(spark, sf_dir)
     w = Window.partitionBy("sid").orderBy("date")
     rets = panel.select("sid", "date", pct_change("close", 1, w).alias("r"))
-    w10 = w.rowsBetween(-9, 0)
-
-    def fold_window(expr, win):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))
-                         .over(win)),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
-    n = F.count("r").over(w10).cast("double")
-    enough = F.count("r").over(w10) >= 10
-    sx = F.when(enough, fold_window(F.col("r"), w10))
-    sxx = F.when(enough, fold_window(F.col("r") * F.col("r"), w10))
+    # the sums are defined on full 10-row frames only (rolling_sum's
+    # min_periods), where the oracle's count(r) is 10
+    r, n = F.col("r"), F.lit(10.0)
+    sx = rolling_sum(r, 10, w)
+    sxx = rolling_sum(r * r, 10, w)
     vol = F.sqrt((sxx - sx * sx / n) / (n - F.lit(1)))
     mom = rets.select("sid", "date",
                     F.when(vol > 0, F.lit(1.0) / vol).alias("ivol"))
-    wd = Window.partitionBy("date")
-    znorm_arr = F.transform(
-        F.array_sort(F.collect_list(F.struct("sid", "ivol")).over(wd)),
-        lambda s: s["ivol"])
-    znorm = F.when(
-        F.col("ivol").isNotNull(),
-        F.aggregate(znorm_arr, F.lit(0.0), lambda a, b: a + b))
+    xs = (Window.partitionBy("date").orderBy("sid")
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    znorm = F.when(F.col("ivol").isNotNull(), frame_sum("ivol", xs))
     return mom.select("sid", "date", "ivol",
                       (F.col("ivol") / znorm).alias("weight"))
 
@@ -2007,20 +1986,17 @@ def momentum_decile_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("week").orderBy("wk_ret", "sid"))
     ranked = defined.withColumn("decile", decile)
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="momentum_decile_sort")
-
+    # width-guarded order-pinned folds (functions/folds.py): errors
+    # inside the job if a group outgrows the in-array bound
+    q = "momentum_decile_sort"
     partials = ranked.groupBy("week", "decile").agg(
         F.count("fwd_ret").alias("n"),
-        fold_by("sid", F.coalesce(F.col("fwd_ret"), F.lit(0))).alias("p"))
+        fold_sum_exact("sid", F.coalesce(F.col("fwd_ret"), F.lit(0)),
+                       label=q).alias("p"))
     return (partials.where(F.col("n") > 0)
             .groupBy("decile")
             .agg(F.sum("n").alias("n_obs"),
-                 (fold_by("week", F.col("p"))
+                 (fold_sum_exact("week", F.col("p"), label=q)
                   / F.sum("n").cast("double")).alias("mean_fwd_ret")))
 
 
@@ -2151,8 +2127,6 @@ def portfolio_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     results = DualMovingAverage().backtest(panel)
     rets = (results.where(F.col("field") == "Return")
             .select("sid", "date", F.col("value").alias("r")))
-    from moonshot_spark.functions.folds import fold_sum_exact
-
     # width-guarded order-pinned folds (functions/folds.py): per-date
     # arrays grow with the cross-section — the guard fails fast instead
     # of OOMing if pointed at an unbounded universe
@@ -2234,14 +2208,14 @@ SELECT field, sid, date, value FROM (
 """)
 def backtest_bollinger_meanrev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full backtest of the Bollinger mean-reversion strategy
-    (``strategies.demo.BollingerMeanReversion``) — the TA indicator
-    stack (functions/ta.py) driving the SAME reference pipeline as the
-    DMA flagship: signals → equal gross weights (long AND short, so the
-    Σ|signal| normalization is exercised with mixed-sign books) →
-    next-day positions → returns/turnover → 10-field melt.  The band
-    comparison is the only float-sensitive edge (a windowed std at an
-    exact threshold); every downstream value is an exact ratio of
-    integers or a product of pinned doubles, the DMA discipline."""
+    (``strategies.demo.BollingerMeanReversion``) — a band signal driving
+    the SAME reference pipeline as the DMA flagship: signals → equal
+    gross weights (long AND short, so the Σ|signal| normalization is
+    exercised with mixed-sign books) → next-day positions →
+    returns/turnover → 10-field melt.  The band comparison is the only
+    float-sensitive edge (a windowed std at an exact threshold); every
+    downstream value is an exact ratio of integers or a product of
+    pinned doubles, the DMA discipline."""
     from moonshot_spark.strategies.demo import BollingerMeanReversion
 
     panel = events_to_panel(spark, sf_dir)

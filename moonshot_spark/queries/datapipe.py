@@ -2243,13 +2243,12 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from moonshot_spark.functions.folds import fold_sum_exact
 
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="tfidf_cosine_pairs")
-
+    # width-guarded order-pinned folds (functions/folds.py): errors
+    # inside the job if a group outgrows the in-array bound
+    q = "tfidf_cosine_pairs"
     norms = wts.groupBy("doc_id").agg(
-        F.sqrt(fold_by("term", F.col("w") * F.col("w"))).alias("nrm"))
+        F.sqrt(fold_sum_exact("term", F.col("w") * F.col("w"), label=q))
+        .alias("nrm"))
     a = wts.select(F.col("doc_id").alias("doc_a"), "term",
                    F.col("w").alias("wa"))
     b = wts.select(F.col("doc_id").alias("doc_b"), "term",
@@ -2257,7 +2256,8 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dots = (a.join(b, "term")
             .where(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
-            .agg(fold_by("term", F.col("wa") * F.col("wb")).alias("dot"),
+            .agg(fold_sum_exact("term", F.col("wa") * F.col("wb"), label=q)
+                 .alias("dot"),
                  F.count("*").alias("n_shared_terms")))
     cos = (F.col("dot") / (F.col("nrm_a") * F.col("nrm_b")))
     return (dots

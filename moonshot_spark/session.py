@@ -1,16 +1,47 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults target the test/bench harness (local[32], 128 GiB box);
-on a real cluster most of these are overridden by spark-submit conf.  The
-scale-relevant settings (AQE, adaptive coalescing, Arrow) are good defaults
-at any scale.
+Local-mode defaults target the test/bench harness: the driver heap is
+sized to the machine (``default_driver_memory``) unless SPARK_DRIVER_MEMORY
+says otherwise; on a real cluster most of these are overridden by
+spark-submit conf.  The scale-relevant settings (AQE, adaptive coalescing,
+Arrow) are good defaults at any scale.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Driver heap for this machine: 40 % of physical memory, and under
+    strict overcommit (``vm.overcommit_memory=2``) at most half the
+    commit limit; between 1 and 16 GiB.  The JVM commits the whole heap
+    at launch (the ``-Xms`` pin below), and the kernel refuses a single
+    mapping larger than RAM + swap, so a fixed 16g default cannot start
+    on a 15 GB box without swap."""
+    try:
+        with open("/proc/meminfo") as f:
+            mem = {key: int(rest.split()[0])
+                   for key, rest in (line.split(":", 1) for line in f)}
+        limit = mem["MemTotal"] * 0.4
+    except (OSError, KeyError, ValueError):
+        return "16g"   # no /proc/meminfo (not Linux): the fixed default
+    try:
+        with open("/proc/sys/vm/overcommit_memory") as f:
+            strict = f.read().strip() == "2"
+    except OSError:
+        strict = False
+    if strict:
+        limit = min(limit, mem.get("CommitLimit", limit) * 0.5)
+    return f"{max(1, min(16, int(limit // (1024 * 1024))))}g"
+
+
+def driver_memory() -> str:
+    """SPARK_DRIVER_MEMORY when set, else the machine-sized default."""
+    return os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
 
 def driver_java_options() -> str:
@@ -23,20 +54,28 @@ def driver_java_options() -> str:
       recommits on the next allocation burst, and the kernel page
       zeroing on each recommit shows up as multi-second SYS-time stalls
       inside timed windows (the r12 in-run bench-drift root cause;
-      PERF.md r13).  Committing the full heap up front is virtual (no
-      RSS cost) and removes the churn.
+      PERF.md r13).  Committing the full heap up front removes the
+      churn; the heap is sized to fit the machine (see
+      ``default_driver_memory``).
+    - ``-XX:ErrorFile`` under the first SPARK_LOCAL_DIRS entry (else the
+      temp dir), so a JVM that fails to start leaves its crash log
+      there instead of in the working directory.
     - ``-XX:+AlwaysPreTouch`` when SPARK_GRAFT_PRETOUCH=1, so
       measurement harnesses zero the pages at startup instead of inside
       the first timed windows.
     """
     user = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "").strip()
-    # A user-supplied -Xms (or explicit AlwaysPreTouch toggle) wins: the
-    # pin is appended AFTER the user options, and HotSpot takes the LAST
-    # occurrence, so appending ours would silently override theirs
-    # (ADVICE r14).  Skip the pin when the user already set one.
+    # A user-supplied -Xms, ErrorFile (or explicit AlwaysPreTouch toggle)
+    # wins: the pin is appended AFTER the user options, and HotSpot takes
+    # the LAST occurrence, so appending ours would silently override
+    # theirs (ADVICE r14).  Skip the pin when the user already set one.
     pinned = []
     if "-Xms" not in user:
-        pinned.append("-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        pinned.append("-Xms" + driver_memory())
+    if "ErrorFile" not in user:
+        local = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0].strip()
+        err_dir = local or tempfile.gettempdir()
+        pinned.append(f"-XX:ErrorFile={err_dir}/hs_err_pid%p.log")
     if (os.environ.get("SPARK_GRAFT_PRETOUCH") == "1"
             and "AlwaysPreTouch" not in user):
         pinned.append("-XX:+AlwaysPreTouch")
@@ -80,7 +119,7 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
                 "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         # default = Spark's own 1g; the 10x-replicated correctness sweep
         # raises it (pair-output queries legitimately return ~100x the
         # rows, and the dual-engine compare pulls the FULL result)

@@ -48,11 +48,14 @@ class DualMovingAverageWithCosts(DualMovingAverage):
 
 
 class BollingerMeanReversion(Moonshot):
-    """Mean-reversion on Bollinger bands (functions/ta.py): long below
-    the lower band, short above the upper band, flat inside — the
-    classic counterpart to the DMA trend follower.  Signals require a
-    full 20-row band (min_periods discipline like the DMA crossover);
-    long/short signals flow through the same equal-weight allocation,
+    """Mean-reversion on Bollinger bands: long below the lower band,
+    short above the upper band, flat inside — the classic counterpart to
+    the DMA trend follower.  The bands are pandas' ``rolling(20).mean()
+    ± 2·rolling(20).std()``, computed with Spark's frame avg and sample
+    std, and signals require a full 20-row band (min_periods discipline
+    like the DMA crossover); ``functions/ta.bollinger`` is the partial-
+    frame Σx/Σx² variant the catalog checks against its oracle.
+    Long/short signals flow through the same equal-weight allocation,
     which normalizes by gross Σ|signal| per date."""
 
     CODE = "boll-mr"

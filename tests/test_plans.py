@@ -1,7 +1,6 @@
 """Lookback pruning tests (D24, reference base.py:1050-1086,1146-1181)."""
 
 import datetime
-import os
 
 from moonshot_spark import Moonshot
 from moonshot_spark.plans.lookback import get_lookback_window, lookback_start_date
@@ -109,37 +108,6 @@ def test_lookback_start_dates_match_reference_pins():
     assert got in ("2017-08-04", "2017-08-05", "2017-08-06", "2017-08-07")
 
 
-def test_compaction_plan_bins_small_files(spark, tmp_path):
-    """20 one-row-ish files must pack into ~total/target bins with the
-    next-fit invariant: every bin except possibly the last holds at
-    least target_rows once closed."""
-    from moonshot_spark.plans.compaction import compaction_plan
-
-    src = str(tmp_path / "small")
-    spark.range(100).repartition(20).write.parquet(src)
-    plan = compaction_plan(spark, src, target_rows=25).toPandas()
-    assert len(plan) == 20
-    assert plan.n_rows.sum() == 100
-    assert plan.bin.min() == 0 and plan.bin.max() <= 4
-    # bins are contiguous in file order
-    ordered = plan.sort_values("file").bin.tolist()
-    assert ordered == sorted(ordered)
-
-
-def test_compact_parquet_rewrites_to_fewer_files(spark, tmp_path):
-    from moonshot_spark.plans.compaction import compact_parquet
-
-    src = str(tmp_path / "frag")
-    dst = str(tmp_path / "compact")
-    spark.range(1000).repartition(50).write.parquet(src)
-    n = compact_parquet(spark, src, dst, target_rows=500)
-    assert n == 2
-    back = spark.read.parquet(dst)
-    assert back.count() == 1000
-    import glob
-    assert len(glob.glob(dst + "/part-*")) == 2
-
-
 def test_session_pins_initial_heap(spark, monkeypatch):
     """r13: G1 heap commit/uncommit churn (tiny default -Xms vs burst
     usage) produced multi-second kernel-time stalls inside timed windows
@@ -148,13 +116,13 @@ def test_session_pins_initial_heap(spark, monkeypatch):
     shrinks/regrows.  Asserts on BEHAVIOR (the computed option string
     and the live session's conf), not on source text (ADVICE r13: the
     old getsource assert could pass on a comment alone)."""
-    from moonshot_spark.session import driver_java_options
+    from moonshot_spark.session import driver_java_options, driver_memory
 
     # the live session was built through get_spark -> the conf must
     # carry the pin (extraJavaOptions is set at JVM launch; reading it
     # back from the running session proves the .config() call exists)
     opts = spark.conf.get("spark.driver.extraJavaOptions")
-    mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    mem = driver_memory()
     assert f"-Xms{mem}" in opts
 
     # user-supplied driver options are preserved, not clobbered
@@ -175,3 +143,50 @@ def test_session_pins_initial_heap(spark, monkeypatch):
     assert "-Xms2g" in combined
     assert "-Xms8g" not in combined
     assert "-XX:+AlwaysPreTouch" not in combined
+
+
+def test_default_driver_heap_fits_machine(monkeypatch):
+    """Without SPARK_DRIVER_MEMORY the session sizes its heap (and the
+    -Xms pin, which commits it at launch) to the machine: at most 40 %
+    of physical memory, at most half the commit limit under strict
+    overcommit, between 1 and 16 GiB — a fixed 16g could not start on a
+    box with less RAM + swap than that."""
+    from moonshot_spark.session import driver_java_options, driver_memory
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", raising=False)
+    mem = driver_memory()
+    assert mem.endswith("g")
+    heap_kb = int(mem[:-1]) * 1024 * 1024
+    assert 1 <= int(mem[:-1]) <= 16
+    with open("/proc/meminfo") as f:
+        info = {k: int(v.split()[0])
+                for k, v in (line.split(":", 1) for line in f)}
+    if heap_kb > 1024 * 1024:   # the 1 GiB floor wins on tiny machines
+        assert heap_kb <= info["MemTotal"] * 0.4
+        with open("/proc/sys/vm/overcommit_memory") as f:
+            if f.read().strip() == "2":
+                assert heap_kb <= info["CommitLimit"] * 0.5
+    assert f"-Xms{mem}" in driver_java_options()
+
+
+def test_driver_error_file_leaves_working_dir_clean(monkeypatch, tmp_path):
+    """A JVM that cannot start writes its crash log under
+    SPARK_LOCAL_DIRS (first entry), else the temp dir — never the
+    working directory; a user-supplied ErrorFile wins."""
+    import tempfile
+
+    from moonshot_spark.session import driver_java_options
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", raising=False)
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{tmp_path},/elsewhere")
+    assert f"-XX:ErrorFile={tmp_path}/hs_err_pid%p.log" in \
+        driver_java_options()
+    monkeypatch.delenv("SPARK_LOCAL_DIRS")
+    assert (f"-XX:ErrorFile={tempfile.gettempdir()}/hs_err_pid%p.log"
+            in driver_java_options())
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_JAVA_OPTS",
+                       "-XX:ErrorFile=/var/log/hs_err_%p.log")
+    opts = driver_java_options()
+    assert opts.count("ErrorFile") == 1
+    assert "-XX:ErrorFile=/var/log/hs_err_%p.log" in opts

@@ -263,49 +263,6 @@ def test_universe_membership_change_invalidates_cache(spark, panel_path,
     assert first == {"1"} and second == {"1", "2"}
 
 
-def test_json_quarantine_split(spark, tmp_path):
-    """Corrupt-tolerant JSON ingestion: bad lines quarantine with raw
-    text, clean rows parse fully — one scan, two filters."""
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType)
-
-    from moonshot_spark.sources.robust import read_json_with_quarantine
-
-    p = tmp_path / "feed.json"
-    p.write_text("\n".join([
-        '{"sid": "A", "close": 10.5, "volume": 100}',
-        'this is not json',
-        '{"sid": "B", "close": "not-a-number", "volume": 5}',
-        '{"sid": "C", "close": 7.25, "volume": 42}',
-    ]))
-    schema = StructType([StructField("sid", StringType()),
-                         StructField("close", DoubleType()),
-                         StructField("volume", LongType())])
-    clean, quarantine = read_json_with_quarantine(spark, str(p), schema)
-    got = {r["sid"]: r["close"] for r in clean.collect()}
-    assert got == {"A": 10.5, "C": 7.25}
-    bad = [r["raw_record"] for r in quarantine.collect()]
-    assert len(bad) == 2
-    assert any("not json" in b for b in bad)
-    assert any("not-a-number" in b for b in bad)
-
-
-def test_csv_quarantine_split(spark, tmp_path):
-    from pyspark.sql.types import (DoubleType, StringType, StructField,
-                                   StructType)
-
-    from moonshot_spark.sources.robust import read_csv_with_quarantine
-
-    p = tmp_path / "feed.csv"
-    p.write_text("sid,close\nA,10.5\nB,garbage\nC,7.25\n")
-    schema = StructType([StructField("sid", StringType()),
-                         StructField("close", DoubleType())])
-    clean, quarantine = read_csv_with_quarantine(spark, str(p), schema)
-    assert {r["sid"]: r["close"] for r in clean.collect()} == \
-        {"A": 10.5, "C": 7.25}
-    assert [r["raw_record"] for r in quarantine.collect()] == ["B,garbage"]
-
-
 def test_get_prices_orc_roundtrip(spark, tmp_path):
     """ORC source parity: the multi-format sink's ORC output reads back
     through get_prices with identical rows (columnar scale path kept)."""

@@ -91,6 +91,28 @@ def test_cum_sum(series_df):
     check_against_pandas(series_df, cum_sum("value"), lambda s: s.cumsum())
 
 
+def test_frame_sum_keeps_array_fold_nulls(series_df):
+    """frame_sum/frame_mean replace the per-row array fold: bit-equal
+    sums, NULL wherever the frame holds a NULL (NULL + x = NULL), and a
+    mean over the frame's row count, not its non-null count."""
+    from moonshot_spark.functions.window import (
+        frame_mean, frame_rows, frame_sum, trailing)
+
+    frame = trailing(5)
+    arr = F.transform(F.array_sort(F.collect_list(
+        F.struct("date", "value")).over(frame)), lambda s: s["value"])
+    fold = F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
+    out = series_df.select(
+        frame_sum("value", frame).alias("s"), fold.alias("fold"),
+        frame_mean("value", frame).alias("m"),
+        (fold / F.size(arr)).alias("fold_m"),
+        frame_rows(frame).alias("n"), F.size(arr).alias("fold_n")).collect()
+    assert sum(r["fold"] is None for r in out) > 0
+    for r in out:
+        assert (r["s"], r["m"], r["n"]) == (r["fold"], r["fold_m"],
+                                            r["fold_n"])
+
+
 def test_xs_sum(series_df):
     out = series_df.withColumn("out", xs_sum("value")).orderBy("sid", "date")
     rows = out.collect()
@@ -225,7 +247,15 @@ def test_asof_join_strict_inequality(spark):
 
 
 def test_fold_sum_exact_matches_python_fold(spark):
-    """fold_sum_exact = left-to-right IEEE fold in key order."""
+    """fold_sum_exact = left-to-right IEEE fold in key order — and so is
+    Spark's own sum/avg over a window frame, which is what lets rolling,
+    running and cross-sectional statistics use frame aggregates instead
+    of per-row array folds (DuckDB's windowed sums re-associate, so its
+    oracles keep list_reduce; both fold in ORDER BY order)."""
+    import random
+
+    from pyspark.sql import Window
+
     from moonshot_spark.functions.folds import fold_sum_exact
 
     rows = [(i, [0.1, 1e-17, -0.1, 0.3][i % 4] * (i + 1)) for i in range(40)]
@@ -235,6 +265,49 @@ def test_fold_sum_exact_matches_python_fold(spark):
     for _, v in sorted(rows):
         expect = expect + v
     assert got == expect   # bit-equal, not approx
+
+    # frame aggregates: wide-dynamic-range doubles, so any other
+    # association order shows in the low bits
+    rng = random.Random(11)
+    series = {g: [rng.choice((-1.0, 1.0)) * 10 ** rng.uniform(-8, 8)
+                  for _ in range(60)] for g in range(12)}
+    frames = {"r20": (-19, 0), "r14": (-13, 0), "r10": (-9, 0),
+              "r3": (-2, 0), "cum": (Window.unboundedPreceding, 0),
+              "all": (Window.unboundedPreceding, Window.unboundedFollowing)}
+    wide = spark.createDataFrame(
+        [(g, k, v) for g, vs in series.items() for k, v in enumerate(vs)],
+        "g int, k int, v double")
+    w = Window.partitionBy("g").orderBy("k")
+    cols = []
+    for name, (lo, hi) in frames.items():
+        fr = w.rowsBetween(lo, hi)
+        arr = F.transform(F.array_sort(F.collect_list(
+            F.struct("k", "v")).over(fr)), lambda s: s["v"])
+        cols += [F.sum("v").over(fr).alias(f"{name}_sum"),
+                 F.avg("v").over(fr).alias(f"{name}_avg"),
+                 F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
+                 .alias(f"{name}_fold")]
+    out = wide.select("g", "k", *cols).collect()
+    assert len(out) == 12 * 60
+    reassociated = 0
+    for r in out:
+        vs = series[r["g"]]
+        for name, (lo, hi) in frames.items():
+            start = 0 if lo == Window.unboundedPreceding else max(0, r["k"] + lo)
+            stop = len(vs) if hi == Window.unboundedFollowing else r["k"] + 1
+            part = vs[start:stop]
+            fwd = 0.0
+            for v in part:
+                fwd = fwd + v
+            rev = 0.0
+            for v in reversed(part):
+                rev = rev + v
+            reassociated += rev != fwd
+            assert r[f"{name}_fold"] == fwd, (name, r["g"], r["k"])
+            assert r[f"{name}_sum"] == fwd, (name, r["g"], r["k"])
+            assert r[f"{name}_avg"] == fwd / len(part), (name, r["g"], r["k"])
+    # control: the data really exposes association order
+    assert reassociated > len(out)
 
 
 def test_fold_sum_exact_width_guard(spark):
